@@ -40,15 +40,67 @@ carrying the rest over by reference — dir-granular copy-on-write, the
 same trick ``delete_where`` plays with probe-pruned dirs. This is what
 keeps a 100 TB keyed-state table writable from a change feed: per-batch
 write cost is O(touched buckets' bytes), never O(|state|).
+
+JOB ECONOMY: the index lifecycles built on this module run short,
+overhead-bound steps, so two rules keep relations from starting Spark
+jobs they do not need.
+
+- Driver-built relations (typed empties, id lists, correction rows) go
+  through :func:`local_frame`, never ``spark.createDataFrame(<list>)``
+  directly, here and in ``streaming/ingest.py`` / ``streaming/ann.py``
+  (a test scans the three files for strays). A list frame is a Python
+  RDD: every use of it starts a job that spawns a Python worker, so one
+  ``createDataFrame([], schema)`` in a join costs three jobs. The Arrow
+  path lands the rows in the JVM as a local relation that costs none.
+- Reads type their scan with the schema the manifest recorded for that
+  version (:meth:`SnapshotTable._reader`), so no job reads parquet
+  footers to infer it. Only ``mixed_schemas`` lineages (whose footers
+  must be merged) and manifests without a ``schema`` field still infer.
+  The recorded schema, not a caller's DDL, types the scan, so a read that
+  is rewritten (compaction, delete) can never drop a column.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` as an Arrow-backed local
+    relation: the same rows, schema and ``verifySchema`` checks, but the
+    rows reach the JVM as one Arrow stream instead of a Python RDD, so
+    the frame starts no job when built and no Python-worker job when
+    used. ``rows`` are positional tuples; ``schema`` is a DDL string or a
+    ``StructType``. One check is stricter: a string field takes only
+    ``str`` values (Arrow raises ``TypeError``), where ``createDataFrame``
+    would stringify anything."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, _make_type_verifier
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    if not isinstance(struct, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    verify = _make_type_verifier(struct)
+    internal = []
+    for r in rows:
+        verify(r)  # raises exactly as createDataFrame(verifySchema=True)
+        internal.append(struct.toInternal(r))  # dates/timestamps -> ints
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], type=f.type)
+            for i, f in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -230,6 +282,19 @@ class SnapshotTable:
             return default
         return self._manifest(v).get(key, default)
 
+    @staticmethod
+    def _reader(spark: SparkSession, m: dict, merge_mixed: bool = True):
+        """The reader for ``m``'s dirs, typed by the schema ``m`` recorded
+        so the scan starts no footer-inference job. A ``mixed_schemas``
+        lineage merges footers instead (``merge_mixed``), or reads under
+        its recorded union schema when a rewrite needs the added columns
+        as NULL; a manifest without a schema falls back to inference."""
+        if merge_mixed and m.get("mixed_schemas"):
+            return spark.read.option("mergeSchema", True)
+        if m.get("schema"):
+            return spark.read.schema(StructType.fromJson(m["schema"]))
+        return spark.read
+
     def _write_manifest(self, manifest: dict) -> None:
         """Atomic COMPARE-AND-SWAP publish: the manifest is linked into
         place with an EXCLUSIVE create (``os.link`` fails with EEXIST if
@@ -333,19 +398,14 @@ class SnapshotTable:
             if ent is None or not (ent[1] < lo or ent[0] > hi):
                 keep.append(d)
         if not keep:
-            from pyspark.sql.types import StructType
-
             if not m.get("schema"):
                 raise ValueError(
                     f"{self.path} v{v}: fully pruned read with no recorded "
                     "schema to type the empty relation"
                 )
-            empty = spark.createDataFrame([], StructType.fromJson(m["schema"]))
+            empty = local_frame(spark, [], StructType.fromJson(m["schema"]))
             return empty, 0, len(m["dirs"])
-        reader = spark.read
-        if m.get("mixed_schemas"):
-            reader = reader.option("mergeSchema", True)
-        return reader.parquet(*keep), len(keep), len(m["dirs"])
+        return self._reader(spark, m).parquet(*keep), len(keep), len(m["dirs"])
 
     def read_point(
         self,
@@ -393,7 +453,6 @@ class SnapshotTable:
         vnorm = self._zm_value(value)
 
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
 
         lit = F.lit(value)
         probe_type: str | None = None
@@ -433,19 +492,14 @@ class SnapshotTable:
             if all(p in bits for p in probe_positions(ent["num_bits"])):
                 keep.append(d)
         if not keep:
-            from pyspark.sql.types import StructType
-
             if not m.get("schema"):
                 raise ValueError(
                     f"{self.path} v{v}: fully pruned read with no recorded "
                     "schema to type the empty relation"
                 )
-            empty = spark.createDataFrame([], StructType.fromJson(m["schema"]))
+            empty = local_frame(spark, [], StructType.fromJson(m["schema"]))
             return empty, 0, len(m["dirs"])
-        reader = spark.read
-        if m.get("mixed_schemas"):
-            reader = reader.option("mergeSchema", True)
-        return reader.parquet(*keep), len(keep), len(m["dirs"])
+        return self._reader(spark, m).parquet(*keep), len(keep), len(m["dirs"])
 
     def commit(
         self,
@@ -610,12 +664,16 @@ class SnapshotTable:
         return self.commit(merged, mode="overwrite")
 
     @staticmethod
-    def _check_delta_keys(delta: DataFrame, on: str) -> None:
+    def _check_delta_keys(delta: DataFrame, on: str, *aggs):
+        """One aggregate over ``delta``: its row count against its distinct
+        non-null keys, plus any caller ``aggs`` riding the same job.
+        Returns the result row."""
         from pyspark.sql import functions as F
 
         chk = delta.agg(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct(F.col(on)).alias("k"),
+            *aggs,
         ).first()
         if chk["n"] != chk["k"]:
             raise ValueError(
@@ -623,6 +681,7 @@ class SnapshotTable:
                 f"{chk['n']} rows but {chk['k']} distinct non-null keys "
                 "(pre-compact the delta, e.g. latest-change-per-key)"
             )
+        return chk
 
     @staticmethod
     def _merge_frames(
@@ -674,11 +733,13 @@ class SnapshotTable:
         (see :meth:`commit_buckets`)."""
         from pyspark.sql import functions as F
 
-        self._check_delta_keys(delta, on)
         self._check_n_buckets(n_buckets)  # fail before any compute
         bucket = self.bucket_of(F.col(on), n_buckets)
+        # the key check and the touched-bucket set share one job
         touched = sorted(
-            r["_b"] for r in delta.select(bucket.alias("_b")).distinct().collect()
+            self._check_delta_keys(
+                delta, on, F.collect_set(bucket).alias("_b")
+            )["_b"]
         )
         if not touched:
             return self.latest_version()
@@ -701,6 +762,16 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+
+    @staticmethod
+    def bucket_ids(spark: SparkSession, values, schema: str, bucket) -> list[int]:
+        """Sorted distinct bucket ids of driver-side key ``values`` (one
+        column, typed by ``schema`` such as ``"doc_id long"``) under the
+        ``bucket`` expression from :meth:`bucket_of`. The projection over
+        a local relation is folded on the driver, so no job starts — a
+        ``distinct()`` would add a shuffle job for nothing."""
+        frame = local_frame(spark, [(v,) for v in values], schema)
+        return sorted({r[0] for r in frame.select(bucket).collect()})
 
     def _bucket_map(self, version: int) -> dict[str, list[str]]:
         m = self._manifest(version)
@@ -746,14 +817,15 @@ class SnapshotTable:
         buckets empty) a typed empty relation instead of an error. Pass
         ``n_buckets`` (the count used to compute ``bucket_ids``) to have it
         validated against the table's recorded bucket count."""
-        if self.latest_version() == 0:
-            return spark.createDataFrame([], schema)
+        v = self.latest_version()
+        if v == 0:
+            return local_frame(spark, [], schema)
         self._check_n_buckets(n_buckets)
-        bm = self._bucket_map(self.latest_version())
+        bm = self._bucket_map(v)
         dirs = [d for b in bucket_ids for d in bm.get(str(b), [])]
         if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(*dirs)
+            return local_frame(spark, [], schema)
+        return self._reader(spark, self._manifest(v)).parquet(*dirs)
 
     def commit_buckets(
         self,
@@ -1178,31 +1250,21 @@ class SnapshotTable:
             raise ValueError(f"{self.path}: no committed versions")
         pm = self._manifest(parent)
         mixed = pm.get("mixed_schemas", False)
+        # on a schema-evolved lineage every read must see the UNION schema
+        # (the current commit's, recorded in the manifest), or a predicate
+        # on an added column crashes with UNRESOLVED_COLUMN on
+        # pre-evolution dirs instead of reading NULL (ADD COLUMN semantics)
+        reader = self._reader(spark, pm, merge_mixed=False)
 
-        def union_reader():
-            # on a schema-evolved lineage every read must see the UNION
-            # schema (the current commit's, recorded in the manifest), or
-            # a predicate on an added column crashes with
-            # UNRESOLVED_COLUMN on pre-evolution dirs instead of reading
-            # NULL (ADD COLUMN semantics)
-            if mixed and pm.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return spark.read.schema(StructType.fromJson(pm["schema"]))
-            return spark.read
-
-        def read_dir(d: str):
-            return union_reader().parquet(d)
-
-        untouched, touched = [], []
+        keep = ~F.coalesce(F.expr(predicate), F.lit(False))
+        untouched, touched, touched_set = [], [], set()
         if pm["dirs"]:
             # one parallel probe over every dir: project the matching
             # rows down to their file names, fold to the distinct dir set
             # — O(matching files) rows to the driver, bounded by the
             # manifest size
             hit_files = (
-                union_reader()
-                .parquet(*pm["dirs"])
+                reader.parquet(*pm["dirs"])
                 .filter(predicate)
                 .select(F.input_file_name().alias("f"))
                 .distinct()
@@ -1215,34 +1277,51 @@ class SnapshotTable:
                 (touched if d in touched_set else untouched).append(d)
         version = parent + 1
         if "buckets" in pm:
-            # BUCKETED parent: preserve the bucket map — rewrite each
-            # touched dir under ITS bucket (dir identity carries the
+            # BUCKETED parent: preserve the bucket map — each touched dir
+            # is rewritten into its OWN new dir (dir identity carries the
             # bucket; the key column/bucket count are not needed), so
-            # read_buckets keeps pruning correctly after the delete
-            buckets: dict[str, list[str]] = {}
-            for b, ds in pm["buckets"].items():
-                out = []
-                for d in ds:
-                    if d in untouched:
-                        out.append(d)
-                        continue
-                    kept = read_dir(d).filter(
-                        ~F.coalesce(F.expr(predicate), F.lit(False))
-                    )
-                    kept.persist()
-                    try:
-                        if kept.count() == 0:
-                            # full-bucket delete: record the empty bucket as
-                            # [] (commit_buckets' convention) instead of
-                            # writing a rows-free parquet dir that every
-                            # later read/carry-over would keep touching
-                            continue
-                        nd = self._fresh_data_dir(version)
-                        kept.write.mode("error").parquet(nd)
-                        out.append(nd)
-                    finally:
-                        kept.unpersist()
-                buckets[b] = out
+            # read_buckets keeps pruning correctly after the delete. One
+            # scan of every touched dir, each row tagged with its source
+            # dir's index, and one write partitioned by that tag: a dir
+            # whose rows all go becomes no partition and leaves its
+            # bucket's list (commit_buckets' [] convention for an empty
+            # bucket) — no per-dir count or write job
+            rewritten: dict[str, str] = {}
+            if touched:
+                src = "_delete_src"
+                kept = functools.reduce(
+                    DataFrame.unionAll,
+                    [
+                        reader.parquet(d).withColumn(src, F.lit(i))
+                        for i, d in enumerate(touched)
+                    ],
+                ).filter(keep)
+                data_dir = self._fresh_data_dir(version)
+                # all of a source dir's rows land in one task, so each
+                # new dir is one file
+                kept.repartition(len(touched), src).write.mode(
+                    "error"
+                ).partitionBy(src).parquet(data_dir)
+                for i, d in enumerate(touched):
+                    nd = f"{data_dir}/{src}={i}"
+                    if os.path.isdir(nd):
+                        rewritten[d] = nd
+                if not rewritten:
+                    # nothing survived anywhere: no dir of this write is
+                    # referenced, so drop its bare _SUCCESS marker now
+                    # rather than leave it to the orphan sweep
+                    import shutil
+
+                    shutil.rmtree(data_dir)
+            buckets = {
+                b: [
+                    rewritten[d] if d in touched_set else d
+                    for d in ds
+                    if d not in touched_set or d in rewritten
+                ]
+                for b, ds in pm["buckets"].items()
+            }
+            dirs = sorted(d for ds in buckets.values() for d in ds)
             self._write_manifest(
                 {
                     **_extra_fields(pm),  # e.g. the replay cursor survives
@@ -1250,13 +1329,9 @@ class SnapshotTable:
                     "version": version,
                     "parent": parent,
                     "mode": "delete",
-                    "dirs": sorted(d for ds in buckets.values() for d in ds),
-                    "zonemaps": self._carry_zonemaps(
-                        pm, sorted(d for ds in buckets.values() for d in ds)
-                    ),
-                    "blooms": self._carry_blooms(
-                        pm, sorted(d for ds in buckets.values() for d in ds)
-                    ),
+                    "dirs": dirs,
+                    "zonemaps": self._carry_zonemaps(pm, dirs),
+                    "blooms": self._carry_blooms(pm, dirs),
                     "buckets": buckets,
                     "n_buckets": pm.get("n_buckets"),
                     "schema": pm.get("schema"),
@@ -1266,14 +1341,12 @@ class SnapshotTable:
             return version
         dirs = list(untouched)
         if touched:
-            # the rewrite must read under the UNION schema too (same
-            # read_dir logic): mergeSchema over just the touched dirs is
+            # the rewrite must read under the UNION schema too:
+            # mergeSchema over just the touched dirs is
             # NOT enough — if only pre-evolution dirs matched, their
             # merged schema lacks the added column and the predicate
             # crashes with UNRESOLVED_COLUMN instead of seeing NULL
-            kept = union_reader().parquet(*touched).filter(
-                ~F.coalesce(F.expr(predicate), F.lit(False))
-            )
+            kept = reader.parquet(*touched).filter(keep)
             data_dir = self._fresh_data_dir(version)
             kept.write.mode("error").parquet(data_dir)
             dirs.append(data_dir)
@@ -1296,6 +1369,29 @@ class SnapshotTable:
             }
         )
         return version
+
+    def commit_metadata(self, extra: dict) -> int:
+        """Metadata-only commit: a new version whose data is the parent's
+        by reference (dirs, bucket map, schema, zone maps, blooms) with
+        ``extra`` merged over the parent's caller metadata — e.g. clearing
+        a pending marker. O(1): no data dir is opened. Published through
+        the same CAS as every commit. Returns the new version."""
+        _check_extra_keys(extra)
+        parent = self.latest_version()
+        if parent == 0:
+            raise ValueError(f"{self.path}: no committed versions")
+        pm = self._manifest(parent)
+        pm.pop("restored_from", None)
+        self._write_manifest(
+            {
+                **pm,
+                **extra,
+                "version": parent + 1,
+                "parent": parent,
+                "mode": "metadata",
+            }
+        )
+        return parent + 1
 
     def restore(self, version: int) -> int:
         """RESTORE: make an earlier version current again as a NEW commit —
@@ -1399,15 +1495,10 @@ class SnapshotTable:
         if len(small) < 2:
             return parent
         mixed = pm.get("mixed_schemas", False)
-        if mixed and pm.get("schema"):
-            # fold under the UNION schema (ADD COLUMN semantics), same as
-            # delete_where's rewrite: small pre-evolution dirs must read
-            # their missing columns as NULL, not crash the fold
-            from pyspark.sql.types import StructType
-
-            reader = spark.read.schema(StructType.fromJson(pm["schema"]))
-        else:
-            reader = spark.read
+        # fold under the recorded (UNION) schema, same as delete_where's
+        # rewrite: small pre-evolution dirs must read their missing
+        # columns as NULL (ADD COLUMN semantics), not crash the fold
+        reader = self._reader(spark, pm, merge_mixed=False)
         version = parent + 1
         nd = self._fresh_data_dir(version)
         reader.parquet(*sorted(small)).write.mode("error").parquet(nd)
@@ -1569,10 +1660,9 @@ class SnapshotTable:
             new_dirs = [d for d in mt["dirs"] if d not in old_dirs]
             if not new_dirs:
                 return tag(new.limit(0), "insert")
-            reader = spark.read
-            if mt.get("mixed_schemas"):
-                reader = reader.option("mergeSchema", True)
-            return tag(align(reader.parquet(*new_dirs)), "insert")
+            return tag(
+                align(self._reader(spark, mt).parquet(*new_dirs)), "insert"
+            )
         if "buckets" in mf and "buckets" in mt and (
             mf.get("n_buckets") == mt.get("n_buckets")
         ):
@@ -1590,18 +1680,14 @@ class SnapshotTable:
                 if not dirs:
                     return align(new.limit(0))
                 # read under the side's RECORDED manifest schema (the
-                # lineage union at that version), exactly as delete_where's
-                # read_dir does: bare footer inference would type the side
+                # lineage union at that version), exactly as delete_where
+                # does: bare footer inference would type the side
                 # by one arbitrary dir and silently drop an evolved
                 # column's values from the other dirs BEFORE align() pads
                 # NULLs — the carried-over narrow buckets must read the
                 # added column as typed NULL, not erase the wide ones'
                 if m.get("schema"):
-                    from pyspark.sql.types import StructType
-
-                    reader = spark.read.schema(
-                        StructType.fromJson(m["schema"])
-                    )
+                    reader = self._reader(spark, m, merge_mixed=False)
                 else:
                     reader = spark.read.option("mergeSchema", True)
                 return align(reader.parquet(*dirs))
@@ -1688,7 +1774,8 @@ class SnapshotTable:
                     m.get("restored_from"),
                 )
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "version int, mode string, parent int, n_dirs int,"
             " restored_from int",
@@ -1706,19 +1793,13 @@ class SnapshotTable:
             # delete that emptied every bucket records each as [] — and
             # zero paths leave nothing to infer a schema from; rebuild the
             # typed empty relation from the manifest's recorded schema
-            from pyspark.sql.types import StructType
-
             if not m.get("schema"):
                 raise ValueError(
                     f"{self.path} v{v}: empty version with no recorded "
                     "schema in its manifest lineage"
                 )
-            return spark.createDataFrame([], StructType.fromJson(m["schema"]))
-        reader = spark.read
-        if m.get("mixed_schemas"):
-            # append lineage spans a schema change: merge footers so the
-            # union schema applies and pre-evolution rows read as NULL in
-            # the added columns (paid only on evolved lineages — a
-            # single-schema table reads with no footer merge)
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*m["dirs"])
+            return local_frame(spark, [], StructType.fromJson(m["schema"]))
+        # an append lineage that spans a schema change merges footers so
+        # pre-evolution rows read as NULL in the added columns (paid only
+        # on evolved lineages); every other read is typed by the manifest
+        return self._reader(spark, m).parquet(*m["dirs"])

@@ -55,7 +55,7 @@ from ..operators.similarity import (
     search_persisted_ivf,
 )
 from ..plans.registry import register
-from ..snapshots import SnapshotTable
+from ..snapshots import SnapshotTable, local_frame
 from ..workdirs import fresh_work_dir
 from .ingest import _capture_plan, stage_table
 
@@ -77,7 +77,8 @@ def _assign_to_lists(
     batch x broadcast centroids -> map-side ``max_by`` argmax over
     (cosine, -cid) — a hash aggregate that folds map-side; a row_number
     window would sort-shuffle the batch."""
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         centroid_rows, "cid long, cv array<double>"
     )
     vecs = batch.select("vec_id", V.to_double_array("embedding").alias("v"))
@@ -329,7 +330,8 @@ def requantize_ivf_index(
             "must be a valid list id"
         )
     before = ivf_list_skew_audit(spark, index_t)
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         new_centroid_rows, "cid long, cv array<double>"
     )
     vecs = index_t.read(spark).select("vec_id", "v")
@@ -1092,7 +1094,7 @@ def bulk_seed_semantic_index(
             .select("va", "vb")
         )
     else:
-        verified = spark.createDataFrame([], "va long, vb long")
+        verified = local_frame(spark, [], "va long, vb long")
     pairs_t.commit(verified, extra={"last_batch_id": batch_id})
     bands_t.commit_buckets(
         bands.withColumn("_bucket", bk_bucket),
@@ -1466,11 +1468,7 @@ def _clear_semantic_signature(
     id_bucket = SnapshotTable.bucket_of(F.col("vec_id"), vec_buckets)
     bk_bucket = SnapshotTable.bucket_of(F.col("bk"), band_buckets)
     pairs_t.delete_where(spark, f"va = {gid} OR vb = {gid}")
-    vb_ = (
-        spark.createDataFrame([(gid,)], "vec_id long")
-        .select(id_bucket.alias("_b"))
-        .first()[0]
-    )
+    vb_ = SnapshotTable.bucket_ids(spark, [gid], "vec_id long", id_bucket)[0]
     bucket_v = vecs_t.read_buckets(
         spark, [vb_], _SEM_VECS_SCHEMA, n_buckets=vec_buckets
     ).localCheckpoint(eager=True)
@@ -1493,15 +1491,7 @@ def _clear_semantic_signature(
         # no stored vector: the clear already completed (or the vector
         # never reached VECS) — every derived surface is already gone
         return
-    bb = sorted(
-        {
-            r["_b"]
-            for r in spark.createDataFrame([(v,) for v in doc_bks], "bk long")
-            .select(bk_bucket.alias("_b"))
-            .distinct()
-            .collect()
-        }
-    )
+    bb = SnapshotTable.bucket_ids(spark, doc_bks, "bk long", bk_bucket)
     bucket_b = bands_t.read_buckets(
         spark, bb, _SEM_BANDS_SCHEMA, n_buckets=band_buckets
     ).localCheckpoint(eager=True)
@@ -1565,11 +1555,7 @@ def erase_semantic_vec(
     id_bucket = SnapshotTable.bucket_of(F.col("vec_id"), vec_buckets)
     bk_bucket = SnapshotTable.bucket_of(F.col("bk"), band_buckets)
     # 1) membership: locate + drop, one bucket
-    mb = (
-        spark.createDataFrame([(erase,)], "vec_id long")
-        .select(mem_bucket.alias("_b"))
-        .first()[0]
-    )
+    mb = SnapshotTable.bucket_ids(spark, [erase], "vec_id long", mem_bucket)[0]
     bucket_mem = members_t.read_buckets(
         spark, [mb], _SEM_MEMBERS_SCHEMA, n_buckets=member_buckets
     ).localCheckpoint(eager=True)
@@ -1578,11 +1564,7 @@ def erase_semantic_vec(
         return  # unknown vector — nothing to erase
     gid, vh = row["gid"], row["vh"]
     # 2) group bookkeeping: one vh bucket
-    gb = (
-        spark.createDataFrame([(vh,)], "vh long")
-        .select(vh_bucket.alias("_b"))
-        .first()[0]
-    )
+    gb = SnapshotTable.bucket_ids(spark, [vh], "vh long", vh_bucket)[0]
     bucket_g = groups_t.read_buckets(
         spark, [gb], _SEM_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -1632,9 +1614,7 @@ def erase_semantic_vec(
             "audit_and_repair_semantic_index before starting this one"
         )
     if pending != token:
-        groups_t.delete_where(
-            spark, "gid IS NULL", extra={"pending_clear": token}
-        )
+        groups_t.commit_metadata({"pending_clear": token})
     _clear_semantic_signature(
         spark, gid, pairs_t, bands_t, vecs_t,
         band_buckets, vec_buckets, band_codes, lsh_bits,
@@ -1796,11 +1776,7 @@ def _resolve_pending_semantic_clear(
                 vb,
                 n_buckets=member_buckets,
             )
-    pgb = (
-        spark.createDataFrame([(pvh,)], "vh long")
-        .select(vh_bucket.alias("_b"))
-        .first()[0]
-    )
+    pgb = SnapshotTable.bucket_ids(spark, [pvh], "vh long", vh_bucket)[0]
     bucket_g0 = groups_t.read_buckets(
         spark, [pgb], _SEM_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -1826,12 +1802,13 @@ def _apply_semantic_group_sync(
         return False
     targets = json.loads(sync)  # {str(vh): surviving n_members}
     vh_bucket = SnapshotTable.bucket_of(F.col("vh"), group_buckets)
-    corr = spark.createDataFrame(
+    corr = local_frame(
+        spark,
         [(int(v), int(n)) for v, n in sorted(targets.items())],
         "vh long, _target long",
     )
-    gb = sorted(
-        {r["_b"] for r in corr.select(vh_bucket.alias("_b")).distinct().collect()}
+    gb = SnapshotTable.bucket_ids(
+        spark, [int(v) for v in targets], "vh long", vh_bucket
     )
     bucket_g = groups_t.read_buckets(
         spark, gb, _SEM_GROUPS_SCHEMA, n_buckets=group_buckets
@@ -1848,9 +1825,7 @@ def _apply_semantic_group_sync(
         gb,
         n_buckets=group_buckets,
     )
-    members_t.delete_where(
-        spark, "vec_id IS NULL", extra={"pending_group_sync": ""}
-    )
+    members_t.commit_metadata({"pending_group_sync": ""})
     return True
 
 
@@ -1888,24 +1863,12 @@ def _clear_semantic_group(
             "audit_and_repair_semantic_index before starting this one"
         )
     if pending != token:
-        groups_t.delete_where(
-            spark, "gid IS NULL", extra={"pending_clear": token}
-        )
+        groups_t.commit_metadata({"pending_clear": token})
     _clear_semantic_signature(
         spark, gid, pairs_t, bands_t, vecs_t,
         band_buckets, vec_buckets, band_codes, lsh_bits,
     )
-    mb = sorted(
-        {
-            r["_b"]
-            for r in spark.createDataFrame(
-                [(i,) for i in vec_ids], "vec_id long"
-            )
-            .select(mem_bucket.alias("_b"))
-            .distinct()
-            .collect()
-        }
-    )
+    mb = SnapshotTable.bucket_ids(spark, vec_ids, "vec_id long", mem_bucket)
     bucket_mem = members_t.read_buckets(
         spark, mb, _SEM_MEMBERS_SCHEMA, n_buckets=member_buckets
     ).localCheckpoint(eager=True)
@@ -1916,11 +1879,7 @@ def _clear_semantic_group(
         mb,
         n_buckets=member_buckets,
     )
-    gb = (
-        spark.createDataFrame([(vh,)], "vh long")
-        .select(vh_bucket.alias("_b"))
-        .first()[0]
-    )
+    gb = SnapshotTable.bucket_ids(spark, [vh], "vh long", vh_bucket)[0]
     bucket_g = groups_t.read_buckets(
         spark, [gb], _SEM_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -1984,13 +1943,7 @@ def erase_semantic_vecs(
         )
     _apply_semantic_group_sync(spark, groups_t, members_t, group_buckets)
     # phase 1: partition
-    ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id long")
-    mb = sorted(
-        {
-            r["_b"]
-            for r in ids_df.select(mem_bucket.alias("_b")).distinct().collect()
-        }
-    )
+    mb = SnapshotTable.bucket_ids(spark, ids, "vec_id long", mem_bucket)
     mrows = (
         members_t.read_buckets(
             spark, mb, _SEM_MEMBERS_SCHEMA, n_buckets=member_buckets
@@ -2007,13 +1960,7 @@ def erase_semantic_vecs(
             int(r["vec_id"])
         )
     vhs = sorted(by_vh)
-    vh_df = spark.createDataFrame([(v,) for v in vhs], "vh long")
-    gb = sorted(
-        {
-            r["_b"]
-            for r in vh_df.select(vh_bucket.alias("_b")).distinct().collect()
-        }
-    )
+    gb = SnapshotTable.bucket_ids(spark, vhs, "vh long", vh_bucket)
     gcount = {
         int(r["vh"]): int(r["n_members"])
         for r in groups_t.read_buckets(
@@ -2211,7 +2158,8 @@ def audit_and_repair_semantic_index(
                     band_buckets, vec_buckets, band_codes, lsh_bits,
                 )
         for b, rows in by_bucket.items():
-            corr = spark.createDataFrame(
+            corr = local_frame(
+                spark,
                 [(r["vh"], r["live_n"]) for r in rows], "vh long, true_n long"
             )
             bucket_g = groups_t.read_buckets(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import PII_REDACT_ORACLE
 from ..plans.registry import register
+from ..snapshots import local_frame
 
 DOCS_SCHEMA = "doc_id long, text string"
 
@@ -489,7 +490,7 @@ def q_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     if t.latest_version() == 0:  # every micro-batch empty: empty view
-        return spark.createDataFrame([], MATVIEW_SCHEMA).select(
+        return local_frame(spark, [], MATVIEW_SCHEMA).select(
             "date", "segment", "n_events", "value_cents"
         )
     return t.read(spark).select("date", "segment", "n_events", "value_cents")
@@ -1012,7 +1013,7 @@ def erase_doc_from_bm25_index(
     # operational landmine: re-ingesting the erased doc_id later makes
     # the next erase's pending-probe see "marker's doc has postings
     # again" and fail loudly on a COMPLETED erase. Metadata-only commit.
-    df_t.delete_where(spark, "term IS NULL", extra={"last_erase_marker": ""})
+    df_t.commit_metadata({"last_erase_marker": ""})
 
 
 # fsck drift-report collects were "bounded by crash damage" only by
@@ -1170,7 +1171,7 @@ def erase_docs_from_bm25_index(
     # marker hygiene: same crash-safety as the single erase — a crash
     # between the delete and this clear leaves a stale batch receipt the
     # entry fsck (or audit_and_repair_bm25_index) removes
-    df_t.delete_where(spark, "term IS NULL", extra={"last_erase_marker": ""})
+    df_t.commit_metadata({"last_erase_marker": ""})
 
 
 def audit_and_repair_bm25_index(
@@ -1191,8 +1192,8 @@ def audit_and_repair_bm25_index(
       merge_bucketed;
     - corpus-counter drift (manifest n_docs / sum_dl vs the postings'
       distinct-doc aggregate): republish the counters in a
-      metadata-only manifest step (a no-match delete_where carries every
-      dir over by reference).
+      metadata-only manifest step (commit_metadata carries every dir over
+      by reference).
 
     Returns one dict per repair ({"kind": "df_drift"|"counter_drift",
     ...}); [] means the index is consistent.
@@ -1218,7 +1219,7 @@ def audit_and_repair_bm25_index(
     stored = (
         df_t.read(spark)
         if df_t.latest_version() > 0
-        else spark.createDataFrame([], "term string, df long")
+        else local_frame(spark, [], "term string, df long")
     )
     from ..snapshots import SnapshotTable as _ST
 
@@ -1284,7 +1285,8 @@ def audit_and_repair_bm25_index(
                     "true_df": r["true_df"],
                 }
             )
-        corr = spark.createDataFrame(
+        corr = local_frame(
+            spark,
             [(r["term"], r["true_df"]) for r in drift],
             "term string, true_df long",
         )
@@ -1316,15 +1318,10 @@ def audit_and_repair_bm25_index(
                 },
             }
         )
-        # metadata-only manifest step: predicate matches nothing, every
-        # data dir carries over by reference, corrected counters ride in
-        postings_t.delete_where(
-            spark,
-            "doc_id IS NULL AND dl IS NULL",
-            extra={
-                "n_docs": int(n_docs_true),
-                "sum_dl": int(sum_dl_true),
-            },
+        # metadata-only manifest step: every data dir carries over by
+        # reference, corrected counters ride in
+        postings_t.commit_metadata(
+            {"n_docs": int(n_docs_true), "sum_dl": int(sum_dl_true)}
         )
     # erase-marker hygiene (r13; simplified r14 after ADVICE): a
     # successful erase now clears its own marker, and the plain-retry
@@ -1334,13 +1331,11 @@ def audit_and_repair_bm25_index(
     # restoring df from the postings ground truth, or a completed
     # erase's receipt orphaned by a crash between the postings delete
     # and its hygiene commit. Clear it unconditionally (metadata-only:
-    # the no-match predicate carries every dir and the bucket map by
-    # reference) so the guarded erase path never fails loudly on ghosts.
+    # every dir and the bucket map carry over by reference) so the
+    # guarded erase path never fails loudly on ghosts.
     stored = df_t.latest_manifest_field("last_erase_marker") or None
     if stored and df_t.latest_version() > 0:
-        df_t.delete_where(
-            spark, "term IS NULL", extra={"last_erase_marker": ""}
-        )
+        df_t.commit_metadata({"last_erase_marker": ""})
         report.append(
             {"kind": "erase_marker_cleared", "marker": stored}
         )
@@ -1572,8 +1567,8 @@ def _bind_bm25_index_fsck_oracle() -> None:
         "postings in ONE scan (a df table row per (doc,term) occurrence) "
         "and rewrites only the drifted terms' vocabulary buckets via the "
         "same merge_bucketed the ingest path uses; corpus-counter drift "
-        "republishes metadata-only (a no-match delete_where carries "
-        "every dir by reference). The oracle is batch BM25 over "
+        "republishes metadata-only (commit_metadata carries every dir "
+        "by reference). The oracle is batch BM25 over "
         "documents MINUS the erased doc — the value hash proves the "
         "fsck restored every scoring surface (postings, df, counters) "
         "exactly; the paired crash drills are "
@@ -1778,7 +1773,8 @@ def make_pack_index_applier(
                 F.col("pk").isin([r["pk"] for r in keys])
             )
         else:
-            key_df = spark_.createDataFrame(
+            key_df = local_frame(
+                spark_,
                 [(r["source"], r["shard"]) for r in keys],
                 "source string, shard long",
             )
@@ -1831,7 +1827,8 @@ def make_pack_index_applier(
                 "packed without rewriting closed packs; replay the "
                 "source in order or re-shard."
             )
-        tails = spark_.createDataFrame(
+        tails = local_frame(
+            spark_,
             [
                 (r["source"], r["shard"], r["pack_id"], r["used"])
                 for r in tail_rows
@@ -2619,7 +2616,7 @@ def make_minhash_index_applier(
             else:
                 hist_bands = hist_bands.join(
                     F.broadcast(
-                        spark_.createDataFrame([(v,) for v in vals], "bval string")
+                        local_frame(spark_, [(v,) for v in vals], "bval string")
                     ),
                     "bval",
                     "semi",
@@ -3273,7 +3270,8 @@ def bulk_seed_minhash_index(
             F.col("jaccard") >= JACCARD_THRESHOLD
         )
     else:
-        verified = spark.createDataFrame(
+        verified = local_frame(
+            spark,
             [], "da long, db long, jaccard double"
         )
     pairs_t.commit(verified, extra={"last_batch_id": batch_id})
@@ -3418,11 +3416,7 @@ def _resolve_pending_minhash_clear(
                 vb,
                 n_buckets=member_buckets,
             )
-    pgb = (
-        spark.createDataFrame([(pth,)], "th string")
-        .select(th_bucket.alias("_b"))
-        .first()[0]
-    )
+    pgb = SnapshotTable.bucket_ids(spark, [pth], "th string", th_bucket)[0]
     bucket_g0 = groups_t.read_buckets(
         spark, [pgb], _MH_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -3452,13 +3446,12 @@ def _apply_minhash_group_sync(
         return False
     targets = json.loads(sync)  # {th: surviving n_members}
     th_bucket = SnapshotTable.bucket_of(F.col("th"), group_buckets)
-    corr = spark.createDataFrame(
+    corr = local_frame(
+        spark,
         [(t, int(n)) for t, n in sorted(targets.items())],
         "th string, _target long",
     )
-    gb = sorted(
-        {r["_b"] for r in corr.select(th_bucket.alias("_b")).distinct().collect()}
-    )
+    gb = SnapshotTable.bucket_ids(spark, list(targets), "th string", th_bucket)
     bucket_g = groups_t.read_buckets(
         spark, gb, _MH_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -3474,9 +3467,7 @@ def _apply_minhash_group_sync(
         gb,
         n_buckets=group_buckets,
     )
-    members_t.delete_where(
-        spark, "doc_id IS NULL", extra={"pending_group_sync": ""}
-    )
+    members_t.commit_metadata({"pending_group_sync": ""})
     return True
 
 
@@ -3517,23 +3508,11 @@ def _clear_minhash_group(
             "audit_and_repair_minhash_index before starting this one"
         )
     if pending != token:
-        groups_t.delete_where(
-            spark, "gid IS NULL", extra={"pending_clear": token}
-        )
+        groups_t.commit_metadata({"pending_clear": token})
     _clear_minhash_signature(
         spark, gid, pairs_t, bands_t, shingles_t, n_buckets, shingle_buckets
     )
-    mb = sorted(
-        {
-            r["_b"]
-            for r in spark.createDataFrame(
-                [(i,) for i in doc_ids], "doc_id long"
-            )
-            .select(mem_bucket.alias("_b"))
-            .distinct()
-            .collect()
-        }
-    )
+    mb = SnapshotTable.bucket_ids(spark, doc_ids, "doc_id long", mem_bucket)
     bucket_mem = members_t.read_buckets(
         spark, mb, _MH_MEMBERS_SCHEMA, n_buckets=member_buckets
     ).localCheckpoint(eager=True)
@@ -3544,11 +3523,7 @@ def _clear_minhash_group(
         mb,
         n_buckets=member_buckets,
     )
-    gb = (
-        spark.createDataFrame([(th,)], "th string")
-        .select(th_bucket.alias("_b"))
-        .first()[0]
-    )
+    gb = SnapshotTable.bucket_ids(spark, [th], "th string", th_bucket)[0]
     bucket_g = groups_t.read_buckets(
         spark, [gb], _MH_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -3625,13 +3600,7 @@ def erase_docs_from_minhash_index(
         )
     _apply_minhash_group_sync(spark, groups_t, members_t, group_buckets)
     # phase 1: partition the list (bounded bucket-pruned reads)
-    ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    mb = sorted(
-        {
-            r["_b"]
-            for r in ids_df.select(mem_bucket.alias("_b")).distinct().collect()
-        }
-    )
+    mb = SnapshotTable.bucket_ids(spark, ids, "doc_id long", mem_bucket)
     mrows = (
         members_t.read_buckets(
             spark, mb, _MH_MEMBERS_SCHEMA, n_buckets=member_buckets
@@ -3648,13 +3617,7 @@ def erase_docs_from_minhash_index(
             int(r["doc_id"])
         )
     ths = sorted(by_th)
-    th_df = spark.createDataFrame([(t,) for t in ths], "th string")
-    gb = sorted(
-        {
-            r["_b"]
-            for r in th_df.select(th_bucket.alias("_b")).distinct().collect()
-        }
-    )
+    gb = SnapshotTable.bucket_ids(spark, ths, "th string", th_bucket)
     gcount = {
         r["th"]: int(r["n_members"])
         for r in groups_t.read_buckets(
@@ -3938,7 +3901,8 @@ def audit_and_repair_minhash_index(
                     n_buckets, shingle_buckets,
                 )
         for b, rows in by_bucket.items():
-            corr = spark.createDataFrame(
+            corr = local_frame(
+                spark,
                 [(r["th"], r["live_n"]) for r in rows], "th string, true_n long"
             )
             bucket_g = groups_t.read_buckets(
@@ -4029,11 +3993,7 @@ def _clear_minhash_signature(
     id_bucket = SnapshotTable.bucket_of(F.col("doc_id"), shingle_buckets)
     bval_bucket = SnapshotTable.bucket_of(F.col("bval"), n_buckets)
     pairs_t.delete_where(spark, f"da = {gid} OR db = {gid}")
-    sb = (
-        spark.createDataFrame([(gid,)], "doc_id long")
-        .select(id_bucket.alias("_b"))
-        .first()[0]
-    )
+    sb = SnapshotTable.bucket_ids(spark, [gid], "doc_id long", id_bucket)[0]
     bucket_sh = shingles_t.read_buckets(
         spark, [sb], _MH_SHINGLES_SCHEMA, n_buckets=shingle_buckets
     ).localCheckpoint(eager=True)
@@ -4049,13 +4009,7 @@ def _clear_minhash_signature(
         # no stored shingles: clear already completed, or the gid was
         # never shingled — either way no band rows exist to remove
         return
-    bb = sorted(
-        r["_b"]
-        for r in spark.createDataFrame([(v,) for v in doc_bvals], "bval string")
-        .select(bval_bucket.alias("_b"))
-        .distinct()
-        .collect()
-    )
+    bb = SnapshotTable.bucket_ids(spark, doc_bvals, "bval string", bval_bucket)
     bucket_bands = bands_t.read_buckets(
         spark, bb, _MH_BANDS_SCHEMA, n_buckets=n_buckets
     ).localCheckpoint(eager=True)
@@ -4116,11 +4070,7 @@ def erase_doc_from_minhash_index(
     th_bucket = SnapshotTable.bucket_of(F.col("th"), group_buckets)
     # 1) membership: locate, one bucket (the row leaves inside whichever
     # branch runs below)
-    mb = (
-        spark.createDataFrame([(erase,)], "doc_id long")
-        .select(mem_bucket.alias("_b"))
-        .first()[0]
-    )
+    mb = SnapshotTable.bucket_ids(spark, [erase], "doc_id long", mem_bucket)[0]
     bucket_mem = members_t.read_buckets(
         spark, [mb], _MH_MEMBERS_SCHEMA, n_buckets=member_buckets
     ).localCheckpoint(eager=True)
@@ -4139,11 +4089,7 @@ def erase_doc_from_minhash_index(
         )
 
     # 2) group bookkeeping: one th bucket
-    gb = (
-        spark.createDataFrame([(th,)], "th string")
-        .select(th_bucket.alias("_b"))
-        .first()[0]
-    )
+    gb = SnapshotTable.bucket_ids(spark, [th], "th string", th_bucket)[0]
     bucket_g = groups_t.read_buckets(
         spark, [gb], _MH_GROUPS_SCHEMA, n_buckets=group_buckets
     ).localCheckpoint(eager=True)
@@ -4196,11 +4142,9 @@ def erase_doc_from_minhash_index(
             "audit_and_repair_minhash_index before starting this one"
         )
     if pending != token:
-        # metadata-only commit: the no-match predicate carries every dir
-        # and the bucket map by reference
-        groups_t.delete_where(
-            spark, "gid IS NULL", extra={"pending_clear": token}
-        )
+        # metadata-only commit: every dir and the bucket map carry over
+        # by reference
+        groups_t.commit_metadata({"pending_clear": token})
     _clear_minhash_signature(
         spark, gid, pairs_t, bands_t, shingles_t, n_buckets, shingle_buckets
     )
